@@ -36,7 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.fs import (
+    StateFS,
+    fs_for_path,
+    recover_swap,
+    swap_dirs,
+)
 
 
 def apply_changes(
@@ -118,10 +123,19 @@ class ParquetStateTable:
     :class:`~spark_streaming_with_debezium_spark.storage.fs.StateFS`,
     selected by the path's URI scheme — a bare local path uses POSIX,
     while ``hdfs://``/``s3a://``/``file://`` paths use the Hadoop
-    FileSystem client, so the same park/land/drop swap runs against the
-    lake the reference targets (`StreamingJobExecutor.scala:18`), not
-    just an ext4 mount.
+    FileSystem client, so the same park/land/drop swap
+    (:func:`~spark_streaming_with_debezium_spark.storage.fs.swap_dirs`)
+    runs against the lake the reference targets
+    (`StreamingJobExecutor.scala:18`), not just an ext4 mount.
     """
+
+    #: (staged, parked) suffixes of the sibling dirs each swap uses;
+    #: rebucket swaps the whole table dir, the others bucket dirs.
+    _SWAPS = {
+        "rebucket": ("_rebucket_new", "_rebucket_old"),
+        "merge": ("_merge_tmp", "_merge_old"),
+        "compact": ("_compact_tmp", "_compact_old"),
+    }
 
     def __init__(
         self,
@@ -136,7 +150,8 @@ class ParquetStateTable:
         self.fs = fs if fs is not None else fs_for_path(spark, path)
         self.key_cols = list(key_cols)
         self.n_buckets = n_buckets
-        self._recover_rebucket()
+        for op in self._SWAPS:
+            self._recover(op)
         # The STORED bucket count wins over the constructor arg: after a
         # rebucket, a reader opening with a stale n_buckets would prune
         # and write buckets under the WRONG modulus (silent key loss).
@@ -159,21 +174,14 @@ class ParquetStateTable:
             json.dumps({"n_buckets": n_buckets}),
         )
 
-    def _recover_rebucket(self) -> None:
-        """Crash recovery for :meth:`rebucket`'s whole-table swap: the
-        parked old layout still present means the swap may not have
-        finished — if the live path is missing, roll BACK (restore the
-        parked layout); otherwise the swap completed and the parked
-        copy is garbage. A half-written new layout (never swapped in)
-        is always garbage."""
-        old_dir = self.path + "_rebucket_old"
-        new_dir = self.path + "_rebucket_new"
-        if self.fs.exists(old_dir):
-            if not self.fs.exists(self.path):
-                self.fs.rename(old_dir, self.path)
-            else:
-                self.fs.delete(old_dir)
-        self.fs.delete(new_dir)
+    def _recover(self, op: str) -> tuple[str, str]:
+        """Undo the leftovers of an interrupted ``op`` swap and return
+        its (staged, parked) dirs, clear for the next swap. Runs on
+        open and before each swap, so a replay on the same object
+        starts from the recovered state too."""
+        staged, parked = (self.path + suffix for suffix in self._SWAPS[op])
+        recover_swap(self.fs, staged, self.path, parked, by_name=op != "rebucket")
+        return staged, parked
 
     def rebucket(self, new_n_buckets: int) -> None:
         """Online bucket-count migration: rewrite the WHOLE table into a
@@ -189,11 +197,9 @@ class ParquetStateTable:
         the stored modulus."""
         if new_n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {new_n_buckets}")
+        new_dir, old_dir = self._recover("rebucket")
         df = self.read()
         schema = self._stored_schema()
-        new_dir = self.path + "_rebucket_new"
-        old_dir = self.path + "_rebucket_old"
-        self.fs.delete(new_dir)
         bucketed = bucket_of(df, self.key_cols, new_n_buckets)
         bucketed.repartition(new_n_buckets, F.col("_bucket")).write.mode(
             "overwrite"
@@ -204,11 +210,7 @@ class ParquetStateTable:
                 json.dumps(schema.jsonValue()),
             )
         self._write_meta(new_dir, new_n_buckets)
-        # swap: park old, land new, drop old — recovery handles a crash
-        # between any two steps (_recover_rebucket rolls back/forward)
-        self.fs.rename(self.path, old_dir)
-        self.fs.rename(new_dir, self.path)
-        self.fs.delete(old_dir)
+        swap_dirs(self.fs, new_dir, self.path, old_dir)
         self.n_buckets = new_n_buckets
 
     def exists(self) -> bool:
@@ -229,9 +231,7 @@ class ParquetStateTable:
         # An empty state (fresh table, or all rows deleted) has no parquet
         # files to infer from — fall back to the schema sidecar.
         schema = self._stored_schema()
-        has_data = self.exists() and any(
-            e.startswith("_bucket=") for e in self.fs.listdir(self.path)
-        )
+        has_data = any(e.startswith("_bucket=") for e in self.fs.listdir(self.path))
         if has_data:
             if schema is not None:
                 # Explicit sidecar schema: after a type widening, bucket
@@ -248,7 +248,7 @@ class ParquetStateTable:
                 df = bucket_of(df, self.key_cols, self.n_buckets)
             # post-evolve: files written before a schema widening lack the
             # new columns; align to the sidecar schema (NULL-filled)
-            return self._align_to_schema(df)
+            return self._align_to_schema(df, schema)
         if schema is None:
             raise FileNotFoundError(
                 f"state table {self.path} not initialized (no data, no schema)"
@@ -345,11 +345,11 @@ class ParquetStateTable:
             self._schema_file, json.dumps(T.StructType(fields).jsonValue())
         )
 
-    def _align_to_schema(self, df: DataFrame) -> DataFrame:
+    @staticmethod
+    def _align_to_schema(df: DataFrame, schema: T.StructType | None) -> DataFrame:
         """Project df onto the stored schema: NULL-fill columns the
         on-disk files don't have yet, and upcast columns written before
         a type widening (post-evolve reads)."""
-        schema = self._stored_schema()
         if schema is None:
             return df
         on_disk = {f.name: f.dataType for f in df.schema.fields}
@@ -371,9 +371,10 @@ class ParquetStateTable:
         recovered or externally-appended buckets can fragment). Returns
         the number of buckets compacted. The 100 TB version runs this
         on a schedule against per-bucket file counts from the lake
-        listing — same logic, same swap protocol as merge()."""
+        listing — same logic, same swap as merge()."""
         if not self.exists():
             return 0
+        staged, parked = self._recover("compact")
         fragmented = []
         for d in self.fs.listdir(self.path):
             if d.startswith("_bucket="):
@@ -388,21 +389,10 @@ class ParquetStateTable:
             return 0
         sub = self._read_bucketed().filter(F.col("_bucket").isin(fragmented))
         sub = sub.repartition(len(fragmented), F.col("_bucket"))
-        # Deterministic sibling scratch dir (single-writer discipline):
-        # a crash leaves it behind, and the delete-first on the next run
-        # sweeps it — same lifecycle a mkdtemp leak would have needed.
-        tmp = self.path + "_compact_tmp"
-        self.fs.delete(tmp)
-        try:
-            sub.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-            for b in fragmented:
-                src = os.path.join(tmp, f"_bucket={b}")
-                dst = os.path.join(self.path, f"_bucket={b}")
-                if self.fs.exists(src):
-                    self.fs.delete(dst)
-                    self.fs.rename(src, dst)
-        finally:
-            self.fs.delete(tmp)
+        sub.write.mode("overwrite").partitionBy("_bucket").parquet(staged)
+        swap_dirs(
+            self.fs, staged, self.path, parked, [f"_bucket={b}" for b in fragmented]
+        )
         return len(fragmented)
 
     def lookup(self, keys: DataFrame) -> DataFrame:
@@ -432,6 +422,7 @@ class ParquetStateTable:
             touched = [r._bucket for r in changes.select("_bucket").distinct().collect()]
             if not touched:
                 return
+            staged, parked = self._recover("merge")
             # Partition pruning: only touched buckets are scanned.
             state = self._read_bucketed().filter(F.col("_bucket").isin(touched))
             # No forced broadcast: small CDC batches get broadcast by AQE
@@ -446,23 +437,11 @@ class ParquetStateTable:
             merged = bucket_of(merged, self.key_cols, self.n_buckets).repartition(
                 max(len(touched), 1), F.col("_bucket")
             )
-            # Write to a scratch dir first, then swap touched bucket dirs
-            # in; dynamic partition overwrite would do this natively on a
-            # real cluster (spark.sql.sources.partitionOverwriteMode=
-            # dynamic) — the explicit swap keeps the "delete bucket that
-            # emptied out" case (every key in a bucket tombstoned) exact.
-            tmp = self.path + "_merge_tmp"
-            self.fs.delete(tmp)
-            try:
-                merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-                for b in touched:
-                    src = os.path.join(tmp, f"_bucket={b}")
-                    dst = os.path.join(self.path, f"_bucket={b}")
-                    if self.fs.exists(dst):
-                        self.fs.delete(dst)
-                    if self.fs.exists(src):
-                        self.fs.rename(src, dst)
-            finally:
-                self.fs.delete(tmp)
+            # Stage the touched buckets, then swap them in; a touched
+            # bucket with no staged copy (every key tombstoned) is dropped.
+            merged.write.mode("overwrite").partitionBy("_bucket").parquet(staged)
+            swap_dirs(
+                self.fs, staged, self.path, parked, [f"_bucket={b}" for b in touched]
+            )
         finally:
             changes.unpersist()

@@ -195,6 +195,22 @@ def batch_apply(
     state.merge(latest, data_cols=[c for c in spec.data_cols if c not in spec.key_cols])
 
 
+def quarantine_batch(
+    df: DataFrame, path: str, batch_col: str, batch_id: int
+) -> None:
+    """Write ``df`` as the ``batch_col=batch_id`` partition of ``path``,
+    overwriting only that partition (dynamic mode): a foreachBatch
+    crash-replay re-delivers the same batch id, so the rewrite is
+    idempotent where a blind append would duplicate the rows."""
+    (
+        df.withColumn(batch_col, F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(batch_col)
+        .parquet(path)
+    )
+
+
 def initial_load(
     raw: DataFrame,
     spec: TableSpec,
@@ -326,8 +342,9 @@ def run_cdc_stream(
 
     ``drift_dead_letter_dir`` changes the destructive-drift outcome
     from fail-the-stream to quarantine-and-continue: the ENTIRE raw
-    batch is appended to the dead-letter path (with ``_batch_id`` and
-    ``_drift_reason`` columns for replay/triage) and its merge is
+    batch is written to the dead-letter path as its own ``_batch_id``
+    partition (:func:`quarantine_batch`, so a replayed batch id is not
+    duplicated), with a ``_drift_reason`` column for triage, and its merge is
     skipped, so one upstream DDL accident doesn't stall every other
     table sharing the stream. The quarantined batch is replayable
     after the operator fixes the spec — the at-scale posture for a
@@ -355,11 +372,9 @@ def run_cdc_stream(
             except SchemaDriftError as err:
                 if drift_dead_letter_dir is None:
                     raise
-                (
-                    projected.withColumn("_batch_id", F.lit(batch_id))
-                    .withColumn("_drift_reason", F.lit(str(err)))
-                    .write.mode("append")
-                    .parquet(drift_dead_letter_dir)
+                quarantine_batch(
+                    projected.withColumn("_drift_reason", F.lit(str(err))),
+                    drift_dead_letter_dir, "_batch_id", batch_id,
                 )
                 return  # quarantined; stream continues
             live_spec[0] = spec

@@ -22,7 +22,10 @@ from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.cdc.envelope import TableSpec
 from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
-from spark_streaming_with_debezium_spark.cdc.pipeline import batch_apply
+from spark_streaming_with_debezium_spark.cdc.pipeline import (
+    batch_apply,
+    quarantine_batch,
+)
 
 
 class CdcRegistry:
@@ -43,8 +46,8 @@ class CdcRegistry:
         #: handling (cdc/drift.py); evolved specs replace the route's
         #: spec so later batches parse with the widened schema.
         self.drift_policy = drift_policy
-        #: When set, events on topics with NO registered route append
-        #: here (raw, with a batch_id column) instead of vanishing —
+        #: When set, events on topics with NO registered route land
+        #: here (raw, partitioned by batch_id) instead of vanishing —
         #: the operational tell for a connector publishing a table
         #: nobody registered (new table, typo'd topic prefix). None
         #: keeps the old drop behavior.
@@ -84,18 +87,9 @@ class CdcRegistry:
             }
             unknown = [t for t in present if t not in self._routes]
             if unknown and self.unknown_topic_dir:
-                # Partition by batch_id and overwrite ONLY that partition
-                # (dynamic mode): a foreachBatch crash-replay re-delivers
-                # the same batch_id, so the rewrite is idempotent — a
-                # blind append would duplicate quarantined rows on every
-                # replay even though the merge path itself is idempotent.
-                (
-                    raw_batch.filter(F.col("topic").isin(unknown))
-                    .withColumn("batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(self.unknown_topic_dir)
+                quarantine_batch(
+                    raw_batch.filter(F.col("topic").isin(unknown)),
+                    self.unknown_topic_dir, "batch_id", batch_id,
                 )
             for topic in present:
                 route = self._routes.get(topic)

@@ -26,7 +26,12 @@ from spark_streaming_with_debezium_spark.cdc.merge import (
     ParquetStateTable,
     apply_changes,
 )
-from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.fs import (
+    StateFS,
+    fs_for_path,
+    recover_swap,
+    swap_dirs,
+)
 
 # Durable marker/pointer writes go through StateFS.write_text_atomic:
 # a torn ``_base_seq``/``.pending`` that parses as 0 would silently
@@ -49,12 +54,16 @@ class TimeTravelStateTable:
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
         self.key_cols = list(key_cols)
-        self.current = ParquetStateTable(
-            spark, os.path.join(path, "current"), key_cols, n_buckets,
-            fs=self.fs,
-        )
         self._snap_dir = os.path.join(path, "snapshot0")
         self._log_dir = os.path.join(path, "log")
+        self._cur_dir = os.path.join(path, "current")
+        # Before anything reads the dirs (the current table's bucket
+        # count comes from its meta sidecar, which a purge may have
+        # parked).
+        self._recover_purge()
+        self.current = ParquetStateTable(
+            spark, self._cur_dir, key_cols, n_buckets, fs=self.fs
+        )
         self._data_cols_path = os.path.join(path, "_data_cols")
         self._base_seq_path = os.path.join(path, "_base_seq")
         # Finish or roll back any compact_log interrupted by a crash
@@ -74,6 +83,11 @@ class TimeTravelStateTable:
         self._seq = self._recover_seq()
         self._data_cols = self._recover_data_cols()
 
+    def _recover_purge(self) -> None:
+        """Undo an interrupted :func:`purge_keys` swap of each dir."""
+        for live in (self._snap_dir, self._log_dir, self._cur_dir):
+            recover_swap(self.fs, *_purge_dirs(live))
+
     def _recover_base_seq(self) -> int:
         if not self.fs.exists(self._base_seq_path):
             return 0
@@ -92,7 +106,8 @@ class TimeTravelStateTable:
         """Crash recovery for :meth:`compact_log`'s rename-only fold
         protocol, keyed on WHICH DIRECTORIES EXIST (each is complete
         by construction — directories only ever appear/disappear via
-        atomic rename, except the aside copy deleted strictly last):
+        atomic rename, except the aside copy, deleted once the new
+        snapshot has landed — ``storage.fs.swap_dirs``):
 
         - marker + snap + tmp, no aside → crash before the swap began:
           roll BACK (drop tmp + marker; nothing was destroyed).
@@ -264,19 +279,15 @@ class TimeTravelStateTable:
         folded.write.mode("overwrite").parquet(tmp)
         # 2. durable write-ahead marker BEFORE any destructive step
         self.fs.write_text_atomic(pend, str(upto_seq))
-        # 3. swap via two atomic renames: aside the old, land the new
-        self.fs.rename(self._snap_dir, old)
-        self.fs.rename(tmp, self._snap_dir)
+        # 3. swap: aside the old, land the new, drop the aside
+        swap_dirs(self.fs, tmp, self._snap_dir, old)
         # 4. persist the base, THEN drop the folded partitions —
         # stale partitions <= base are invisible to as_of (its filter
         # is _batch_seq > base), so a crash between these steps only
-        # leaves ignorable files, never a wrong reconstruction. The
-        # aside copy is deleted LAST: until then every crash state
-        # still holds at least one complete snapshot.
+        # leaves ignorable files, never a wrong reconstruction.
         self._base_seq = upto_seq
         self.fs.write_text_atomic(self._base_seq_path, str(upto_seq))
         dropped = self._drop_folded_partitions(upto_seq)
-        self.fs.delete(old)
         self.fs.delete(pend)
         return dropped
 
@@ -342,6 +353,9 @@ def changes_between(
     )
 
 
+def _purge_dirs(live: str) -> tuple[str, str, str]:
+    """(staged, live, parked) of :func:`purge_keys`' swap of ``live``."""
+    return live + "_purging", live, live + "_purged_old"
 
 
 def purge_keys(table: TimeTravelStateTable, keys: DataFrame) -> dict[str, int]:
@@ -354,61 +368,47 @@ def purge_keys(table: TimeTravelStateTable, keys: DataFrame) -> dict[str, int]:
     semantics a lake table needs out-of-band of normal CDC flow.
 
     Keys are a broadcast anti-join side (erasure requests are small by
-    nature). Each directory is rewritten with the same RENAME-ONLY
-    swap discipline as ``compact_log`` (materialize aside → two atomic
-    renames → delete aside last), applied snapshot → log → current:
-    every crash state holds at least one complete copy of each
-    directory, and re-invoking purge with the same keys completes an
-    interrupted scrub (each step is idempotent — an anti join of
-    already-purged data is a no-op rewrite). Returns rows dropped per
-    store. At 100 TB: one bounded rewrite per store; the log rewrite
-    preserves ``_batch_seq`` partitioning so as_of pruning is intact."""
+    nature). Each directory is rewritten into a staged copy and swapped
+    in with ``storage.fs.swap_dirs``, snapshot → log → current; a crash
+    is rolled back per directory when the table is reopened, and
+    re-invoking purge with the same keys completes the scrub (an anti
+    join of already-purged data is a no-op rewrite). Returns rows
+    dropped per store. At 100 TB: one bounded rewrite per store; the
+    log rewrite preserves ``_batch_seq`` partitioning so as_of pruning
+    is intact."""
     spark = table.spark
     fs = table.fs
     k = F.broadcast(keys.select(*table.key_cols).distinct())
+    table._recover_purge()
 
-    def swap_in(dir_path: str, purged: DataFrame, part_col: str | None) -> None:
-        tmp, old = dir_path + "_purging", dir_path + "_purged_old"
-        fs.delete(tmp)
-        w = purged.write.mode("overwrite")
-        if part_col:
-            w = w.partitionBy(part_col)
-        w.parquet(tmp)
-        fs.rename(dir_path, old)
-        fs.rename(tmp, dir_path)
-        fs.delete(old)
-
+    # Each store: write the purged copy to its staged dir (reads the
+    # live dir, writes staged — disjoint paths), then swap it in.
     dropped: dict[str, int] = {}
     # snapshot (plain parquet)
     snap = spark.read.parquet(table._snap_dir)
     keep = snap.join(k, table.key_cols, "left_anti")
     dropped["snapshot"] = snap.count() - keep.count()
-    swap_in(table._snap_dir, keep, None)
+    dirs = _purge_dirs(table._snap_dir)
+    keep.write.mode("overwrite").parquet(dirs[0])
+    swap_dirs(fs, *dirs)
     # log (partitioned by _batch_seq) — may not exist yet
     if fs.isdir(table._log_dir):
         log = spark.read.parquet(table._log_dir)
         keep = log.join(k, table.key_cols, "left_anti")
         dropped["log"] = log.count() - keep.count()
-        swap_in(table._log_dir, keep, "_batch_seq")
+        dirs = _purge_dirs(table._log_dir)
+        keep.write.mode("overwrite").partitionBy("_batch_seq").parquet(dirs[0])
+        swap_dirs(fs, *dirs)
     else:
         dropped["log"] = 0
-    # current state — rebuild the bucketed layout (bucket dirs + schema
-    # sidecar) in a SIDE directory and swap it in rename-only. Calling
-    # table.current.init(keep) in place would overwrite the directory
-    # that `keep` lazily reads (self-overwrite hazard), and a crash
-    # mid-overwrite would leave no complete copy of the current store —
-    # the aside discipline the snapshot/log rewrites already follow.
+    # current state — a side table on the staged dir rebuilds the
+    # bucketed layout (bucket dirs + schema/meta sidecars)
     cur = table.current.read()
     keep = cur.join(k, table.key_cols, "left_anti")
     dropped["current"] = cur.count() - keep.count()
-    cur_dir = table.current.path
-    tmp, old = cur_dir + "_purging", cur_dir + "_purged_old"
-    fs.delete(tmp)
-    side = ParquetStateTable(
-        spark, tmp, table.key_cols, table.current.n_buckets, fs=fs
-    )
-    side.init(keep)  # reads cur_dir, writes tmp — disjoint paths
-    fs.rename(cur_dir, old)
-    fs.rename(tmp, cur_dir)
-    fs.delete(old)
+    dirs = _purge_dirs(table._cur_dir)
+    ParquetStateTable(
+        spark, dirs[0], table.key_cols, table.current.n_buckets, fs=fs
+    ).init(keep)
+    swap_dirs(fs, *dirs)
     return dropped

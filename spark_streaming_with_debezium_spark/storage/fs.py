@@ -1,44 +1,44 @@
-"""Filesystem abstraction for the durable-state layer.
+"""Filesystem abstraction and the one directory swap every state store
+commits through.
 
-The CDC state stores (`cdc/merge.py`, `cdc/timetravel.py`,
-`cdc/transactions.py`, `streaming/neardup.py`) implement
-park/land/drop and write-then-pointer commit protocols. Those
-protocols are storage-agnostic, but expressing them with
-``os.rename``/``os.listdir`` binds them to a POSIX mount — the
-reference's target store is HDFS (`StreamingJobExecutor.scala:18`),
-and a 100 TB deployment lands on HDFS or an object store, not ext4.
+The reference gets atomic MERGE commits from Delta's log on HDFS
+(`StreamingJobExecutor.scala:47-61`). Our stand-in: each store writes
+the new copy into a *staged* dir and :func:`swap_dirs` moves it over
+the *live* one (the whole dir, or a list of its child dirs):
 
-This module lifts the file operations behind :class:`StateFS` with two
-implementations:
+1. park: rename each live entry to the same name under ``parked``;
+2. land: rename the staged entry to the live name (an entry with no
+   staged copy — a bucket whose keys were all deleted — stays gone);
+3. drop: delete ``parked``, then ``staged``.
 
-- :class:`LocalFS` — ``os``/``shutil``, with fsync'd atomic text
-  writes. Used for bare local paths (every test default, and the
-  fastest path on a laptop).
-- :class:`HadoopFS` — Spark's JVM Hadoop ``FileSystem`` client, so the
-  SAME protocol runs against any scheme the cluster's Hadoop conf
-  knows: ``hdfs://``, ``s3a://``, ``gs://``, ``abfss://``, and
-  ``file://`` (which is how the test suite exercises this backend
-  without a cluster).
+Entries only appear or vanish by rename, so every crash state holds
+one complete copy of each entry, and :func:`recover_swap` (run on open
+and before the next swap) handles them all: a parked entry whose live
+copy is missing is renamed back (crash between park and land), one
+whose live copy exists is dropped (crash after land), and a staged
+dir is dropped (crash before or during the write). A child-list swap
+can thus come back partly new and partly old. That is correct under
+Structured Streaming's recovery model (a foreachBatch micro-batch is
+committed only after it returns, so the crashed batch replays with
+the same id against the recovered state) because every writer is
+idempotent or fenced on replay: last-write-wins merge, HLL union, the
+CMS batch-id fence, the purge anti-join, compaction's same-rows
+rewrite.
 
-:func:`fs_for_path` picks the backend by URI scheme, so a state table
-constructed on ``s3a://bucket/state/orders`` just works.
+Recovery assumes one writer per store. A reader constructed in
+another process while a writer is mid-swap also runs recovery and can
+move a parked entry back under the writer; that is not supported.
 
-Semantics notes (the protocol code is written against these):
-
-- ``rename`` is required to be atomic per-directory on HDFS and on
-  POSIX. On S3A, rename is a copy+delete (not atomic); the commit
-  protocols remain *correct* there because every swap parks the old
-  directory first and recovery rolls forward/back from which
-  directories exist — but the instantaneous-swap guarantee weakens to
-  eventual. For S3-first deployments, prefer the
-  ``partitionOverwriteMode=dynamic`` write path (see
-  ``ParquetStateTable.merge``'s docstring) or a table format with a
-  log (Delta/Iceberg) — the module keeps those call sites behind this
-  one seam.
-- Hadoop ``rename(src, dst)`` fails when ``dst`` exists (POSIX
-  overwrites). The protocols always delete ``dst`` first when they
-  mean replace, so both backends behave identically; ``rename`` here
-  raises on failure rather than returning False.
+:class:`LocalFS` (``os``/``shutil``, fsync'd atomic text writes) serves
+bare local paths; :class:`HadoopFS` (Spark's JVM Hadoop ``FileSystem``
+client) serves every scheme the Hadoop conf knows — ``hdfs://``,
+``s3a://``, ``gs://``, ``abfss://``, and ``file://``, which is how the
+tests exercise it without a cluster. :func:`fs_for_path` picks by URI
+scheme. ``rename`` must be atomic per directory, as on POSIX and HDFS;
+S3A renames a directory by copy+delete, so a crash inside a land can
+leave a partial live entry that recovery keeps — use a table format
+with a log (Delta/Iceberg) there. ``rename`` raises when ``dst`` exists
+on both backends (Hadoop would otherwise move ``src`` into it).
 """
 
 from __future__ import annotations
@@ -210,3 +210,57 @@ def fs_for_path(spark: SparkSession, path: str) -> StateFS:
     if urlparse(path).scheme:
         return HadoopFS(spark, path)
     return LocalFS()
+
+
+def swap_dirs(
+    fs: StateFS,
+    staged: str,
+    live: str,
+    parked: str,
+    names: list[str] | None = None,
+) -> None:
+    """Replace ``live`` with ``staged`` by park → land → drop (see the
+    module docstring). ``names=None`` swaps the whole directory; a list
+    swaps those child directories of ``live`` with the same-named
+    children of ``staged``. A name with no staged copy drops its live
+    one. ``staged`` and ``parked`` are gone afterwards. Run
+    :func:`recover_swap` on the same paths before calling this."""
+    if names is None:
+        entries = [(staged, live, parked)]
+    else:
+        fs.mkdirs(parked)
+        entries = [
+            (os.path.join(staged, n), os.path.join(live, n), os.path.join(parked, n))
+            for n in names
+        ]
+    for src, dst, old in entries:
+        if fs.exists(dst):
+            fs.rename(dst, old)
+        if fs.exists(src):
+            fs.rename(src, dst)
+    fs.delete(parked)
+    fs.delete(staged)
+
+
+def recover_swap(
+    fs: StateFS, staged: str, live: str, parked: str, by_name: bool = False
+) -> None:
+    """Undo the crash leftovers of a :func:`swap_dirs` on the same paths
+    (``by_name`` when it swapped a list of children): drop each parked
+    entry whose live copy exists, rename back each one whose live copy
+    is missing, then drop ``parked`` and ``staged``. A no-op after a
+    swap that finished."""
+    if by_name:
+        entries = [
+            (os.path.join(live, n), os.path.join(parked, n))
+            for n in fs.listdir(parked)
+        ]
+    else:
+        entries = [(live, parked)] if fs.exists(parked) else []
+    for dst, old in entries:
+        if fs.exists(dst):
+            fs.delete(old)
+        else:
+            fs.rename(old, dst)
+    fs.delete(parked)
+    fs.delete(staged)

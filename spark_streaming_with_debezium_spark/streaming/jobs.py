@@ -15,6 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spark_streaming_with_debezium_spark.storage.fs import (
+    fs_for_path,
+    recover_swap,
+    swap_dirs,
+)
+
 _LOG = logging.getLogger(__name__)
 
 EVENTS_SCHEMA = T.StructType(
@@ -633,27 +639,17 @@ def streaming_heavy_hitters(
     )
 
 
-def _recover_swapped_state(state_dir: str) -> None:
-    """Crash recovery for the rename-based state swap used by
-    :func:`run_rolling_hll_stream` and :func:`run_cms_token_stream`. If ``state_dir`` is absent, restore the newest complete
-    copy: prefer ``_tmp`` (the just-written merge, complete iff its
-    parquet ``_SUCCESS`` marker exists) over ``_old`` (the pre-swap
-    state). Then clear any leftover side directories so the next swap
-    starts clean. Idempotent; called before every micro-batch merge."""
-    import os
-    import shutil
+def _state_dirs(state_dir: str) -> tuple[str, str, str]:
+    """(staged, live, parked) of the sketch-state swap."""
+    return state_dir + "_tmp", state_dir, state_dir + "_old"
 
-    tmp, old = state_dir + "_tmp", state_dir + "_old"
-    if not os.path.isdir(state_dir):
-        if os.path.isdir(tmp) and os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            os.rename(tmp, state_dir)
-        elif os.path.isdir(old):
-            os.rename(old, state_dir)
-    for side in (tmp, old):
-        if os.path.isdir(side):
-            shutil.rmtree(side)
+
+def _recover_swapped_state(state_dir: str) -> None:
+    """Roll back an interrupted state swap of
+    :func:`run_rolling_hll_stream` / :func:`run_cms_token_stream`
+    (``storage.fs.recover_swap``); the batch that swapped replays."""
+    fs = fs_for_path(SparkSession.active(), state_dir)
+    recover_swap(fs, *_state_dirs(state_dir))
 
 
 def run_rolling_hll_stream(
@@ -670,24 +666,23 @@ def run_rolling_hll_stream(
     without re-reading a single event.
 
     Replay safety: the merge rewrites the full (tiny) state per batch
-    via write-into-temp + a rename-based swap (``state`` → ``_old``,
-    ``_tmp`` → ``state``, then drop ``_old``) so a crash at ANY point
-    leaves a complete state copy recoverable: ``_recover_swapped_state``
-    runs before every batch and prefers a fully-written ``_tmp``
-    (``_SUCCESS`` marker present) over ``_old`` when ``state`` is
-    absent. A replayed batch re-unions the same day sketches — HLL
-    union is IDEMPOTENT (set-semantics state machine), so duplicate
-    delivery cannot inflate estimates, which a counter-based state
-    table cannot claim.
+    into ``_tmp`` and swaps it in with ``storage.fs.swap_dirs``
+    (``state`` → ``_old``, ``_tmp`` → ``state``, then drop ``_old``).
+    Before every batch, ``_recover_swapped_state`` rolls an interrupted
+    swap BACK to the pre-batch state (a missing ``state`` gets ``_old``
+    back; ``_tmp`` is dropped), and the uncommitted batch replays. A
+    replayed batch re-unions the same day sketches — HLL union is
+    IDEMPOTENT (set-semantics state machine), so duplicate delivery
+    cannot inflate estimates, which a counter-based state table cannot
+    claim.
     """
-    import os
-    import shutil
-
     from spark_streaming_with_debezium_spark.operators.sketches import (
         LG_CONFIG_K,
     )
 
     spark = events.sparkSession
+    fs = fs_for_path(spark, state_dir)
+    staged, _, parked = _state_dirs(state_dir)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
@@ -696,7 +691,7 @@ def run_rolling_hll_stream(
         daily = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
             F.hll_sketch_agg("user_id", F.lit(LG_CONFIG_K)).alias("sk_new")
         )
-        if os.path.isdir(state_dir):
+        if fs.isdir(state_dir):
             state = spark.read.parquet(state_dir)
             merged = (
                 state.join(daily, "day", "full_outer")
@@ -712,16 +707,8 @@ def run_rolling_hll_stream(
             )
         else:
             merged = daily.select("day", F.col("sk_new").alias("sk"))
-        tmp, old = state_dir + "_tmp", state_dir + "_old"
-        merged.write.mode("overwrite").parquet(tmp)
-        # Rename-based swap: a crash between any two steps leaves
-        # either state_dir intact, or a complete copy in _tmp/_old
-        # that _recover_hll_state restores on the next batch.
-        if os.path.isdir(state_dir):
-            os.rename(state_dir, old)
-        os.rename(tmp, state_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        merged.write.mode("overwrite").parquet(staged)
+        swap_dirs(fs, staged, state_dir, parked)
 
     q = (
         events.writeStream.outputMode("append")
@@ -787,9 +774,11 @@ def run_cms_token_stream(
     fence makes add-merge transactional).
 
     Atomicity: the fence column rides INSIDE the same parquet rows as
-    the counters and the whole directory commits via the rename-based
-    swap (shared :func:`_recover_swapped_state` crash recovery), so
-    counters and fence can never diverge.
+    the counters and the whole directory commits via one
+    ``storage.fs.swap_dirs`` swap, so counters and fence can never
+    diverge. An interrupted swap is rolled BACK before the next batch
+    (shared :func:`_recover_swapped_state`): the fence still holds the
+    previous id, so the replayed batch is applied exactly once.
 
     ADVICE r9: the state also records the checkpoint's stable query id
     (``run_id``). Batch ids restart at 0 when a stream is pointed at
@@ -806,7 +795,6 @@ def run_cms_token_stream(
     explode + map-side-combined groupBy into ≤ d·w rows.
     """
     import os
-    import shutil
 
     from spark_streaming_with_debezium_spark.llm.dedup import _md5_60bit
     from spark_streaming_with_debezium_spark.operators.sketches import (
@@ -817,6 +805,8 @@ def run_cms_token_stream(
     )
 
     spark = docs.sparkSession
+    fs = fs_for_path(spark, state_dir)
+    staged, _, parked = _state_dirs(state_dir)
 
     def _checkpoint_query_id() -> str:
         """Stable per-checkpoint stream identity — Structured Streaming
@@ -835,7 +825,7 @@ def run_cms_token_stream(
             return  # P3 empty-batch guard
         _recover_swapped_state(state_dir)
         run_id = _checkpoint_query_id()
-        have_state = os.path.isdir(state_dir)
+        have_state = fs.isdir(state_dir)
         if have_state:
             state = spark.read.parquet(state_dir)
             last = state.agg(F.max("last_batch_id")).collect()[0][0]
@@ -895,13 +885,8 @@ def run_cms_token_stream(
         out = merged.withColumn(
             "last_batch_id", F.lit(int(batch_id)).cast("long")
         ).withColumn("run_id", F.lit(run_id))
-        tmp, old = state_dir + "_tmp", state_dir + "_old"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(state_dir):
-            os.rename(state_dir, old)
-        os.rename(tmp, state_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        out.write.mode("overwrite").parquet(staged)
+        swap_dirs(fs, staged, state_dir, parked)
 
     q = (
         docs.writeStream.outputMode("append")

@@ -36,7 +36,7 @@ duplicates.
 
 **File hygiene**: every append leaves small files under the touched
 ``_bdir`` partitions; ``SignatureStore.compact`` rewrites fragmented
-partitions (same swap protocol as ``ParquetStateTable.compact_buckets``)
+partitions (the ``storage.fs.swap_dirs`` swap every state store uses)
 and ``run_neardup_dedup_stream(compact_every_n_batches=N)`` schedules
 it inside foreachBatch, serialized with probes and appends.
 
@@ -53,7 +53,12 @@ import os  # os.path.join only — file ops go through StateFS
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_with_debezium_spark.storage.fs import StateFS, fs_for_path
+from spark_streaming_with_debezium_spark.storage.fs import (
+    StateFS,
+    fs_for_path,
+    recover_swap,
+    swap_dirs,
+)
 
 from spark_streaming_with_debezium_spark.llm.dedup import (
     banded_rows,
@@ -71,36 +76,14 @@ class SignatureStore:
         self.spark = spark
         self.path = path
         self.fs = fs if fs is not None else fs_for_path(spark, path)
-        self._recover_compact()
+        recover_swap(self.fs, *self._compact_dirs(), by_name=True)
 
-    def _aside_root(self) -> str:
-        # Aside dirs must live OUTSIDE self.path: Spark's partition
-        # discovery keeps any name containing '=', so an in-place
-        # '_bdir=7.aside' would be parsed as a (bogus) partition value.
-        return self.path + "_aside"
-
-    def _recover_compact(self) -> None:
-        """Crash-recovery sweep for :meth:`compact`'s rename-aside
-        swap. For each partition parked in the aside root: if the live
-        partition exists the swap completed → drop the aside copy; if
-        it does not, the crash hit between the two renames → rename
-        the aside copy back (roll back; the rewrite is redone by the
-        next compact). Also clears the orphaned ``_compact_tmp`` scratch
-        dir from a crashed rewrite."""
-        aside_root = self._aside_root()
-        if self.fs.isdir(aside_root):
-            for d in self.fs.listdir(aside_root):
-                if not d.startswith("_bdir="):
-                    continue
-                live = os.path.join(self.path, d)
-                parked = os.path.join(aside_root, d)
-                if self.fs.isdir(live):
-                    self.fs.delete(parked)
-                else:
-                    self.fs.rename(parked, live)
-            if not self.fs.listdir(aside_root):
-                self.fs.delete(aside_root)
-        self.fs.delete(self.path + "_compact_tmp")
+    def _compact_dirs(self) -> tuple[str, str, str]:
+        # (staged, live, parked) of compact's swap. The parked dir must
+        # live OUTSIDE self.path: Spark's partition discovery keeps any
+        # name containing '=', so an in-place '_bdir=7.aside' would be
+        # parsed as a (bogus) partition value.
+        return self.path + "_compact_tmp", self.path, self.path + "_aside"
 
     def exists(self) -> bool:
         return self.fs.isdir(self.path) and any(
@@ -126,11 +109,12 @@ class SignatureStore:
     def compact(self, min_files: int = 8) -> int:
         """Rewrite ``_bdir`` partitions fragmented into ``min_files``+
         parquet files (each batch append leaves one file per touched
-        partition). Same write-to-temp-then-swap protocol as
+        partition). Same staged swap as
         ``ParquetStateTable.compact_buckets``; call only from the
         single writer (foreachBatch). Returns partitions compacted."""
         if not self.exists():
             return 0
+        recover_swap(self.fs, *self._compact_dirs(), by_name=True)
         fragmented = []
         for d in self.fs.listdir(self.path):
             if d.startswith("_bdir="):
@@ -147,31 +131,9 @@ class SignatureStore:
             F.col("_bdir").isin(fragmented)
         )
         sub = sub.repartition(len(fragmented), F.col("_bdir"))
-        tmp = self.path + "_compact_tmp"
-        self.fs.delete(tmp)
-        aside_root = self._aside_root()
-        try:
-            sub.write.mode("overwrite").partitionBy("_bdir").parquet(tmp)
-            self.fs.mkdirs(aside_root)
-            for b in fragmented:
-                src = os.path.join(tmp, f"_bdir={b}")
-                dst = os.path.join(self.path, f"_bdir={b}")
-                parked = os.path.join(aside_root, f"_bdir={b}")
-                if self.fs.exists(src):
-                    # Rename-only swap (the old rmtree(dst)-then-move
-                    # could crash between the two and permanently lose
-                    # the partition's accepted-doc signatures, letting
-                    # previously accepted docs be re-admitted later):
-                    # park the old partition, land the new, delete the
-                    # parked copy last. _recover_compact rolls back or
-                    # completes from any crash point.
-                    self.fs.rename(dst, parked)
-                    self.fs.rename(src, dst)
-                    self.fs.delete(parked)
-            if self.fs.isdir(aside_root) and not self.fs.listdir(aside_root):
-                self.fs.delete(aside_root)
-        finally:
-            self.fs.delete(tmp)
+        staged, live, parked = self._compact_dirs()
+        sub.write.mode("overwrite").partitionBy("_bdir").parquet(staged)
+        swap_dirs(self.fs, staged, live, parked, [f"_bdir={b}" for b in fragmented])
         return len(fragmented)
 
 

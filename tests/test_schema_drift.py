@@ -426,6 +426,41 @@ def test_streaming_drift_dead_letter_quarantine(spark, tmp_path):
     assert spark.read.parquet(dlq).count() == 1  # no new quarantines
 
 
+def test_drift_quarantine_replay_keeps_one_copy(spark, tmp_path):
+    """A crash after the quarantine write but before the checkpoint
+    commit replays the batch under the same id: its dead-letter
+    partition is rewritten, not appended to a second time."""
+    import os
+
+    raw_schema = "key string, value string, offset long"
+    src = tmp_path / "src"
+    src.mkdir()
+    dropped = [{"type": "int64", "optional": False, "field": "id"}]
+    k, v, off = _env("u", {"id": 1}, 0, dropped)
+    (src / "b0.json").write_text(json.dumps({"key": k, "value": v, "offset": off}))
+    state = ParquetStateTable(spark, str(tmp_path / "state"), ["id"], n_buckets=2)
+    state.init(spark.createDataFrame([], "id long, email string"))
+    ckpt, dlq = str(tmp_path / "ckpt"), str(tmp_path / "dlq")
+
+    def drain():
+        run_cdc_stream(
+            spark.readStream.schema(raw_schema).json(str(src)),
+            SPEC, state, ckpt,
+            drift_policy="evolve", drift_dead_letter_dir=dlq,
+        ).awaitTermination()
+
+    drain()
+    assert spark.read.parquet(dlq).count() == 1
+    # batch 0 never committed (the commit file and its checksum)
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    drain()
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))  # it replayed
+    dl = spark.read.parquet(dlq).collect()
+    assert len(dl) == 1
+    assert dl[0]._batch_id == 0 and "missing: email" in dl[0]._drift_reason
+
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

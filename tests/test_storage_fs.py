@@ -6,6 +6,8 @@ would execute against hdfs:// / s3a:// paths unchanged."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -199,3 +201,146 @@ def test_timetravel_and_txn_buffer_on_hadoop_fs(spark, tmp_path):
     buf.write(e2.limit(0), n2.limit(0), applied)  # version 1 supersedes
     e3, n3, _ = buf.read()
     assert e3.count() == 0 and n3.count() == 0
+
+
+# ---------------------------------------------------------------------------
+# crash injection: every file operation of every swap
+# ---------------------------------------------------------------------------
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crashing(base):
+    """``base`` StateFS that raises :class:`_Crash` at its ``crash_at``-th
+    mutating operation (``None``: never) and counts them in ``ops``."""
+
+    class CrashFS(base):
+        crash_at: int | None = None
+        ops = 0
+
+        def _step(self):
+            self.ops += 1
+            if self.ops == self.crash_at:
+                raise _Crash(f"crash at file op {self.ops}")
+
+        def mkdirs(self, path):
+            self._step()
+            return super().mkdirs(path)
+
+        def delete(self, path):
+            self._step()
+            return super().delete(path)
+
+        def rename(self, src, dst):
+            self._step()
+            return super().rename(src, dst)
+
+        def write_text_atomic(self, path, text):
+            self._step()
+            return super().write_text_atomic(path, text)
+
+    return CrashFS
+
+
+_CHG = "id long, v long, deleted boolean"
+
+
+def _setup_merge(spark, path):
+    st = ParquetStateTable(spark, path, ["id"], n_buckets=4)
+    st.init(spark.range(24).select("id", (F.col("id") * 2).alias("v")))
+
+
+def _run_merge(spark, st):
+    from spark_streaming_with_debezium_spark.cdc.merge import bucket_of
+
+    # every key of bucket 0 deleted (the bucket empties out and must be
+    # dropped), one update elsewhere, one insert
+    b0 = [
+        r.id
+        for r in bucket_of(spark.range(24), ["id"], 4)
+        .filter("_bucket = 0")
+        .collect()
+    ]
+    other = next(i for i in range(24) if i not in b0)
+    rows = [(i, None, True) for i in b0] + [(other, -1, False), (100, 7, False)]
+    st.merge(spark.createDataFrame(rows, _CHG))
+
+
+def _setup_compact(spark, path):
+    from spark_streaming_with_debezium_spark.cdc.merge import bucket_of
+
+    _setup_merge(spark, path)
+    # three more appends: every bucket ends up with four files
+    for lo in (100, 200, 300):
+        bucket_of(
+            spark.range(lo, lo + 24).select("id", (F.col("id") * 2).alias("v")),
+            ["id"],
+            4,
+        ).repartition(4, "_bucket").write.mode("append").partitionBy(
+            "_bucket"
+        ).parquet(path)
+
+
+_SWAP_CALLS = {
+    "merge": (_setup_merge, _run_merge),
+    "compact_buckets": (
+        _setup_compact,
+        lambda spark, st: st.compact_buckets(min_files=4),
+    ),
+    "rebucket": (_setup_merge, lambda spark, st: st.rebucket(8)),
+}
+
+
+@pytest.mark.parametrize("backend", ["local", "hadoop"])
+@pytest.mark.parametrize("call", sorted(_SWAP_CALLS))
+def test_swap_crash_at_every_file_op_then_replay(spark, tmp_path, backend, call):
+    """Crash ``merge`` / ``compact_buckets`` / ``rebucket`` at each of
+    its file operations in turn, reopen the table and replay the same
+    call: the state must equal a run that never crashed, with no
+    staged or parked directory left next to the table."""
+    import shutil
+
+    setup, run = _SWAP_CALLS[call]
+    base_cls = LocalFS if backend == "local" else HadoopFS
+
+    def uri(local_dir):
+        return local_dir if backend == "local" else "file://" + local_dir
+
+    def crash_fs(path, crash_at):
+        fs = _crashing(base_cls)(*(() if backend == "local" else (spark, path)))
+        fs.crash_at = crash_at
+        return fs
+
+    base = str(tmp_path / "base" / "t")
+    setup(spark, base)
+
+    def fresh(name):
+        d = str(tmp_path / name)
+        shutil.copytree(base, d + "/t")
+        return d, uri(d + "/t")
+
+    _, ref_path = fresh("ref")
+    counter = crash_fs(ref_path, None)
+    ref = ParquetStateTable(spark, ref_path, ["id"], n_buckets=4, fs=counter)
+    counter.ops = 0
+    run(spark, ref)
+    n_ops = counter.ops
+    want = sorted(tuple(r) for r in ref.read().collect())
+    want_n = ref.n_buckets
+    assert n_ops >= 5
+
+    for k in range(1, n_ops + 1):
+        d, path = fresh(f"crash{k}")
+        fs = crash_fs(path, None)
+        st = ParquetStateTable(spark, path, ["id"], n_buckets=4, fs=fs)
+        fs.ops, fs.crash_at = 0, k
+        with pytest.raises(_Crash):
+            run(spark, st)
+        reopened = ParquetStateTable(spark, path, ["id"], n_buckets=4)
+        run(spark, reopened)
+        got = sorted(tuple(r) for r in reopened.read().collect())
+        assert got == want, f"{call} crashed at file op {k}/{n_ops}"
+        assert reopened.n_buckets == want_n
+        assert os.listdir(d) == ["t"], f"leftovers after crash at op {k}"

@@ -383,3 +383,65 @@ def test_purge_keys_scrubs_history(spark, tmp_path):
     # a reopened table still recovers sequence + serves purged history
     t2 = TimeTravelStateTable(spark, str(tmp_path / "tt"), ["id"], n_buckets=4)
     assert _rows(t2.as_of(1)) == [(2, "b"), (3, "c")]
+
+
+def test_purge_keys_resumes_from_every_crash_state(spark, tmp_path):
+    """Plant each crash state of purge_keys' three swaps (snapshot →
+    log → current; staged copy written / live parked / new copy landed),
+    reopen the table and re-run the purge with the same keys: the keys
+    are gone and every read, as_of and change feed equals a purge that
+    never crashed."""
+    import os
+    import shutil
+
+    from spark_streaming_with_debezium_spark.cdc.timetravel import (
+        changes_between,
+        purge_keys,
+    )
+
+    base = str(tmp_path / "base")
+    t = TimeTravelStateTable(spark, base, ["id"], n_buckets=4)
+    t.init(spark.createDataFrame([(1, "a"), (2, "b"), (4, "d")], "id long, v string"))
+    chg = "id long, v string, deleted boolean"
+    t.merge_logged(spark.createDataFrame([(1, "a2", False), (3, "c", False)], chg))
+    t.merge_logged(spark.createDataFrame([(1, "a3", False), (2, None, True)], chg))
+    # the current table's bucket count now lives only in its meta sidecar
+    t.current.rebucket(8)
+    keys = spark.createDataFrame([(1,)], "id long")
+
+    def views(tt):
+        return (
+            _rows(tt.read()),
+            [_rows(tt.as_of(s)) for s in (0, 1, 2)],
+            sorted(tuple(r) for r in changes_between(tt, 0, 2).collect()),
+        )
+
+    done = str(tmp_path / "done")
+    shutil.copytree(base, done)
+    purge_keys(TimeTravelStateTable(spark, done, ["id"], n_buckets=4), keys)
+    want = views(TimeTravelStateTable(spark, done, ["id"], n_buckets=4))
+    assert want[0] == [(3, "c"), (4, "d")]
+    assert all(1 not in {r[0] for r in rows} for rows in want[1])
+
+    stores = ["snapshot0", "log", "current"]
+    for i, store in enumerate(stores):
+        for stage in ("staged", "parked", "landed"):
+            d = str(tmp_path / f"{store}-{stage}")
+            shutil.copytree(base, d)
+            for purged in stores[:i]:
+                shutil.rmtree(os.path.join(d, purged))
+                shutil.copytree(os.path.join(done, purged), os.path.join(d, purged))
+            live, new = os.path.join(d, store), os.path.join(done, store)
+            if stage == "staged":
+                shutil.copytree(new, live + "_purging")
+            elif stage == "parked":
+                os.rename(live, live + "_purged_old")
+                shutil.copytree(new, live + "_purging")
+            else:
+                os.rename(live, live + "_purged_old")
+                shutil.copytree(new, live)
+            re = TimeTravelStateTable(spark, d, ["id"], n_buckets=4)
+            assert re.current.n_buckets == 8, (store, stage)
+            purge_keys(re, keys)
+            assert views(re) == want, (store, stage)
+            assert sorted(os.listdir(d)) == sorted(os.listdir(done)), (store, stage)
