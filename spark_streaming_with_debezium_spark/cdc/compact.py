@@ -25,19 +25,15 @@ def compact_latest(
     changes: DataFrame,
     key_cols: Sequence[str],
     order_cols: Sequence[str] = ("ts_ms",),
-    descending: bool = True,
 ) -> DataFrame:
-    """Keep only the latest change row per key.
+    """Keep only the latest change row per key (highest ``order_cols``).
 
     ``order_cols`` must be a total order within a key — for Kafka input
     use ``("partition", "offset")``; for synthesized batches a
     monotone sequence id. (Debezium guarantees per-key ordering within
     a topic partition, so (partition, offset) is a correct LWW order.)
     """
-    ordering = [
-        F.col(c).desc_nulls_last() if descending else F.col(c).asc_nulls_last()
-        for c in order_cols
-    ]
+    ordering = [F.col(c).desc_nulls_last() for c in order_cols]
     w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(*ordering)
     return (
         changes.withColumn("_rn", F.row_number().over(w))
@@ -66,8 +62,7 @@ def compact_latest_agg(
     remains the default because its shuffle is the same hash
     partitioning the downstream merge join reuses.
 
-    Descending order is built in (latest wins), matching
-    ``compact_latest``'s default."""
+    Latest wins, as in ``compact_latest``."""
     key_cols = list(key_cols)
     payload = [c for c in changes.columns if c not in key_cols]
     ord_struct = F.struct(*[F.col(c) for c in order_cols])

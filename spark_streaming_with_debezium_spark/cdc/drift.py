@@ -32,8 +32,9 @@ This module closes the loop:
   :class:`SchemaDriftError` so the caller can dead-letter the batch
   VISIBLY instead of merging silently-corrupted rows.
 
-``run_cdc_stream(..., drift_policy="evolve")`` wires this into the
-continuous path per micro-batch.
+The per-table micro-batch step (``TableStep`` in cdc/pipeline.py) runs
+:func:`apply_drift` for both stream drivers: ``run_cdc_stream(...,
+drift_policy="evolve")`` and ``CdcRegistry(drift_policy="evolve")``.
 """
 
 from __future__ import annotations
@@ -111,9 +112,7 @@ def connect_field_to_spark(f: dict) -> tuple[T.DataType, str | None]:
     )
 
 
-def observed_after_schema(
-    raw: DataFrame, value_col: str = "value"
-) -> list[list[dict]]:
+def observed_after_schema(raw: DataFrame) -> list[list[dict]]:
     """Distinct after-image field lists observed in the batch's in-band
     Connect schemas. Returns one ``fields`` list (of Connect field
     dicts) per distinct schema; empty if the producer runs with
@@ -123,9 +122,9 @@ def observed_after_schema(
     string (map-side combine collapses each partition to its distinct
     schemas), then a bounded driver collect of the few survivors.
     """
-    sch = F.get_json_object(F.col(value_col).cast("string"), "$.schema")
+    sch = F.get_json_object(F.col("value").cast("string"), "$.schema")
     distinct = (
-        raw.filter(F.col(value_col).isNotNull())
+        raw.filter(F.col("value").isNotNull())
         .select(sch.alias("_schema"))
         .filter(F.col("_schema").isNotNull())
         .groupBy(F.xxhash64("_schema").alias("_fp"))
@@ -203,7 +202,7 @@ class DriftReport:
         return "; ".join(bits) or "none"
 
 
-def detect_drift(raw: DataFrame, spec: TableSpec, value_col: str = "value") -> DriftReport:
+def detect_drift(raw: DataFrame, spec: TableSpec) -> DriftReport:
     """Diff the batch's in-band Connect schemas against ``spec``.
 
     Multiple distinct schemas in one batch (a DDL change mid-batch)
@@ -213,7 +212,7 @@ def detect_drift(raw: DataFrame, spec: TableSpec, value_col: str = "value") -> D
     reported even if another schema still matches the declared type.
     No in-band schema → no detectable drift (report is empty).
     """
-    schemas = observed_after_schema(raw, value_col=value_col)
+    schemas = observed_after_schema(raw)
     report = DriftReport()
     if not schemas:
         return report
@@ -276,7 +275,6 @@ def apply_drift(
     spec: TableSpec,
     state,
     policy: str = "evolve",
-    value_col: str = "value",
 ) -> TableSpec:
     """Detect drift in ``raw`` and act on it. Returns the spec to parse
     this batch with (possibly widened).
@@ -291,7 +289,7 @@ def apply_drift(
     """
     if policy not in ("evolve", "strict"):
         raise ValueError(f"unknown drift policy: {policy!r}")
-    report = detect_drift(raw, spec, value_col=value_col)
+    report = detect_drift(raw, spec)
     if not report.has_drift:
         return spec
     if policy == "strict":

@@ -379,19 +379,15 @@ def _key_schema_of(spec: TableSpec) -> T.StructType:
     return T.StructType([T.StructField(f.name, f.dataType) for f in fields])
 
 
-def dead_letters(
-    raw: DataFrame,
-    spec: TableSpec,
-    value_col: str = "value",
-) -> DataFrame:
+def dead_letters(raw: DataFrame, spec: TableSpec) -> DataFrame:
     """Malformed change events: value present but the envelope failed to
     parse (no payload.op). These rows are silently DROPPED by the merge
     path; route this DataFrame to a quarantine sink so a poison message
     never stalls the stream (the at-scale alternative to failing the
     job on one bad record)."""
     val_schema = envelope_value_schema(spec.wire_schema)
-    parsed = raw.filter(F.col(value_col).isNotNull()).withColumn(
-        "_v", F.from_json(F.col(value_col).cast("string"), val_schema)
+    parsed = raw.filter(F.col("value").isNotNull()).withColumn(
+        "_v", F.from_json(F.col("value").cast("string"), val_schema)
     )
     return parsed.filter(
         F.col("_v").isNull() | F.col("_v.payload.op").isNull()
@@ -401,8 +397,6 @@ def dead_letters(
 def parse_envelope(
     raw: DataFrame,
     spec: TableSpec,
-    value_col: str = "value",
-    key_col: str = "key",
     seq_cols: tuple[str, ...] = (),
     include_before: bool = False,
     pushdown_barrier: bool = False,
@@ -440,7 +434,7 @@ def parse_envelope(
     val_schema = envelope_value_schema(spec.wire_schema)
     key_schema = envelope_key_schema(_key_schema_of(spec))
 
-    df = raw.filter(F.col(value_col).isNotNull())
+    df = raw.filter(F.col("value").isNotNull())
     if pushdown_barrier:
         # Taint the parse input with a non-deterministic identity (an
         # always-empty string gated on rand), making the _v/_k aliases
@@ -453,18 +447,18 @@ def parse_envelope(
         df = df.select(
             "*",
             F.from_json(
-                F.concat(F.col(value_col).cast("string"), nd_empty), val_schema
+                F.concat(F.col("value").cast("string"), nd_empty), val_schema
             ).alias("_v"),
             F.from_json(
-                F.concat(F.col(key_col).cast("string"), nd_empty), key_schema
+                F.concat(F.col("key").cast("string"), nd_empty), key_schema
             ).alias("_k"),
         )
     else:
         df = df.withColumn(
-            "_v", F.from_json(F.col(value_col).cast("string"), val_schema)
+            "_v", F.from_json(F.col("value").cast("string"), val_schema)
         )
         df = df.withColumn(
-            "_k", F.from_json(F.col(key_col).cast("string"), key_schema)
+            "_k", F.from_json(F.col("key").cast("string"), key_schema)
         )
 
     def key_expr(k: str) -> Column:

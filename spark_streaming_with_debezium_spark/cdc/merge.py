@@ -9,9 +9,9 @@ Reproduces the Delta merge of the reference
     WHEN NOT MATCHED [AND NOT s.deleted] THEN INSERT *
 
 without requiring delta-spark: one full-outer join + ``coalesce``
-projection. Catalyst plans it as a single shuffle on the key (or a
-broadcast join when the change batch is small — the common CDC case,
-hinted via ``broadcast_changes``).
+projection. Catalyst plans it as a single shuffle on the key (AQE turns
+it into a broadcast join when the change batch is small — the common
+CDC case).
 
 Scale notes (100 TB state):
 - The expensive part is rewriting state. ``apply_changes`` is the pure
@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from spark_streaming_with_debezium_spark.storage.fs import (
     StateFS,
+    fragmented_partitions,
     fs_for_path,
     recover_swap,
     swap_dirs,
@@ -49,14 +50,12 @@ def apply_changes(
     changes: DataFrame,
     key_cols: Sequence[str],
     data_cols: Sequence[str] | None = None,
-    deleted_col: str = "deleted",
-    broadcast_changes: bool = False,
 ) -> DataFrame:
     """Apply a compacted change batch to a target state DataFrame.
 
     ``changes`` must hold at most one row per key (run
     :func:`compact_latest` first) with columns ``key_cols`` +
-    ``data_cols`` + ``deleted_col``. Returns the new state with the
+    ``data_cols`` + ``deleted``. Returns the new state with the
     target's schema.
 
     Semantics per key:
@@ -70,10 +69,8 @@ def apply_changes(
     if data_cols is None:
         data_cols = [c for c in target.columns if c not in key_cols]
     src = changes.select(
-        *key_cols, *[c for c in data_cols], F.col(deleted_col).alias("_deleted")
+        *key_cols, *[c for c in data_cols], F.col("deleted").alias("_deleted")
     )
-    if broadcast_changes:
-        src = F.broadcast(src)
 
     t = target.alias("t")
     s = src.alias("s")
@@ -375,16 +372,7 @@ class ParquetStateTable:
         if not self.exists():
             return 0
         staged, parked = self._recover("compact")
-        fragmented = []
-        for d in self.fs.listdir(self.path):
-            if d.startswith("_bucket="):
-                files = [
-                    f
-                    for f in self.fs.listdir(os.path.join(self.path, d))
-                    if f.endswith(".parquet")
-                ]
-                if len(files) >= min_files:
-                    fragmented.append(int(d.split("=", 1)[1]))
+        fragmented = fragmented_partitions(self.fs, self.path, "_bucket", min_files)
         if not fragmented:
             return 0
         sub = self._read_bucketed().filter(F.col("_bucket").isin(fragmented))

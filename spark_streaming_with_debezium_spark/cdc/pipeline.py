@@ -1,29 +1,34 @@
-"""CDC jobs: batch replay + Structured Streaming wrappers (SURVEY §2.9).
+"""CDC jobs: one per-table micro-batch step and the drivers around it
+(SURVEY §2.9).
 
-Two entry points mirroring the reference's two jobs:
+The reference runs one upsert function per micro-batch
+(`StreamingJobExecutor.scala:47-61`) and lists reusing it per table as
+future work (README.md:51). Here that function is :class:`TableStep`,
+one table's share of a micro-batch: schema drift, a plain or near-dup
+apply, and the compaction cadence. A plain apply is :func:`batch_apply`
+(parse → LWW-compact → merge); its prelude :func:`latest_changes` also
+serves the near-dup apply and :func:`initial_load`, the snapshot job
+(`StreamingJobInitialExecutor.scala:15-51`).
 
-- :func:`initial_load` — the snapshot/bootstrap path
-  (`StreamingJobInitialExecutor.scala:15-51`): append-materialize
-  snapshot (op='r') events.
-- :func:`run_cdc_stream` — the continuous path
-  (`StreamingJobExecutor.scala:16-61`): readStream → parse → per-batch
-  compact+merge via ``foreachBatch``, with a real checkpoint location
-  (the reference ignores its checkpoint constructor arg and hardcodes
-  one path for both jobs — defect §2.11-5).
-
-The per-batch function is pure (parse → compact → merge), so the SAME
-code path serves batch replay in tests and streaming in production —
-exactly how foreachBatch is meant to be used.
+Both stream drivers run the step: :func:`run_cdc_stream` for one table
+(`StreamingJobExecutor.scala:16-61`) and ``CdcRegistry.run_stream``
+(cdc/registry.py) for many topic-routed tables on one stream. Every
+query starts through :func:`start_foreach_batch` with a real checkpoint
+location (the reference hardcodes one path for both jobs — defect
+§2.11-5). The step is a pure function of (batch, state), so the SAME
+code path serves batch replay in tests and streaming in production.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.cdc.compact import compact_latest
+from spark_streaming_with_debezium_spark.cdc.drift import SchemaDriftError, apply_drift
 from spark_streaming_with_debezium_spark.cdc.envelope import TableSpec, parse_envelope
 from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
 
@@ -176,23 +181,36 @@ def project_kafka(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
+def latest_changes(
+    raw: DataFrame,
+    spec: TableSpec,
+    seq_cols: Sequence[str] = ("partition", "offset"),
+) -> DataFrame:
+    """Parse → LWW-compact: the latest change row per key of ``raw``,
+    ordered by whichever of ``seq_cols`` it carries (else ``ts_ms``).
+    Deletes stay in, flagged ``deleted``."""
+    seq_cols = tuple(c for c in seq_cols if c in raw.columns)
+    changes = parse_envelope(raw, spec, seq_cols=seq_cols)
+    return compact_latest(changes, spec.key_cols, order_cols=seq_cols or ("ts_ms",))
+
+
+def _merge_cols(spec: TableSpec) -> list[str]:
+    return [c for c in spec.data_cols if c not in spec.key_cols]
+
+
 def batch_apply(
     raw_batch: DataFrame,
     spec: TableSpec,
     state: ParquetStateTable,
     seq_cols: Sequence[str] = ("partition", "offset"),
 ) -> None:
-    """The foreachBatch body: parse → LWW-compact → merge.
+    """The plain apply: parse → LWW-compact → merge.
 
     Replaces `StreamingJobExecutor.upsertToDelta`
     (`StreamingJobExecutor.scala:47-61`) + the driver-side formatter —
     one distributed plan, no driver hop, dedup-safe.
     """
-    seq_cols = tuple(c for c in seq_cols if c in raw_batch.columns)
-    changes = parse_envelope(raw_batch, spec, seq_cols=seq_cols)
-    order = seq_cols if seq_cols else ("ts_ms",)
-    latest = compact_latest(changes, spec.key_cols, order_cols=order)
-    state.merge(latest, data_cols=[c for c in spec.data_cols if c not in spec.key_cols])
+    state.merge(latest_changes(raw_batch, spec, seq_cols), data_cols=_merge_cols(spec))
 
 
 def quarantine_batch(
@@ -217,82 +235,157 @@ def initial_load(
     state: ParquetStateTable,
     seq_cols: Sequence[str] = ("partition", "offset"),
 ) -> None:
-    """Bootstrap state from snapshot events (op='r').
+    """Bootstrap state from a bounded read of change events (the
+    snapshot's op='r' reads, possibly followed by later changes).
 
     The reference appends every batch blindly
-    (`StreamingJobInitialExecutor.scala:44-51`); we filter to snapshot
-    reads and LWW-compact so re-delivered snapshots stay idempotent.
+    (`StreamingJobInitialExecutor.scala:44-51`); we LWW-compact first,
+    so re-delivered snapshots stay idempotent, and then drop the keys
+    whose latest event is a delete, so a deleted row does not come back.
     """
-    seq_cols = tuple(c for c in seq_cols if c in raw.columns)
-    changes = parse_envelope(raw, spec, seq_cols=seq_cols).filter(~F.col("deleted"))
-    latest = compact_latest(
-        changes, spec.key_cols, order_cols=seq_cols if seq_cols else ("ts_ms",)
-    )
-    snapshot = latest.select(*spec.data_cols)
-    state.init(snapshot)
+    latest = latest_changes(raw, spec, seq_cols)
+    state.init(latest.filter(~F.col("deleted")).select(*spec.data_cols))
 
 
-def batch_apply_with_neardup(
-    raw_batch: DataFrame,
-    spec: TableSpec,
-    state: ParquetStateTable,
-    store,
-    text_col: str,
-    threshold: float = 0.5,
-    seq_cols: Sequence[str] = ("partition", "offset"),
-) -> None:
-    """foreachBatch body composing CDC upsert with ingest-time
-    near-duplicate suppression: parse → LWW-compact → drop upserts that
-    near-duplicate an already-accepted document (or an earlier doc in
-    the same batch) → merge survivors + deletes.
+@dataclass
+class TableStep:
+    """One table's share of a micro-batch: drift → apply → maintenance.
+    ``step(raw_batch, batch_id)`` is the foreachBatch body of
+    :func:`run_cdc_stream` and, per routed table, of
+    ``CdcRegistry.apply_batch``. :attr:`spec` is the spec the next batch
+    parses with; drift evolution widens it.
 
-    The reference's foreachBatch upsert loop
-    (`StreamingJobExecutor.scala:47-61`) composed with the
-    ``SignatureStore`` stage from streaming/neardup.py in ONE batch
-    function — ingest and dedup share the micro-batch, the checkpoint,
-    and the replay story instead of running as two parallel pipelines.
+    ``drift_policy`` ('evolve' | 'strict') first checks the batch's
+    IN-BAND Connect schema (cdc/drift.py): 'evolve' adds nullable
+    columns / widens numerics in both :attr:`spec` and the state
+    table's sidecar schema; destructive drift raises
+    :class:`SchemaDriftError` and fails the batch VISIBLY. With
+    ``drift_dead_letter_dir`` set, such a batch is quarantined there
+    whole instead (its own ``_batch_id`` partition, see
+    :func:`quarantine_batch`, with a ``_drift_reason`` column), its
+    merge skipped, so one upstream DDL accident does not stall the
+    stream; it is replayable once the spec is fixed.
 
-    Ordering/crash contract: the state merge runs inside the dedup
-    stage's ``sink`` callback, i.e. BEFORE the signature store mutates.
-    A crash in between replays the batch against an unchanged store,
-    re-derives the same survivors (the probe excludes the batch's own
-    doc_ids), and the LWW merge is idempotent. Semantics note: an
-    UPDATE whose new text near-duplicates another accepted document is
-    suppressed — state keeps the document's previous version; deletes
-    always pass through (a delete for a suppressed key is a no-op
-    merge).
+    ``neardup_store`` (a ``streaming.neardup.SignatureStore``) +
+    ``neardup_text_col`` replace the plain apply with ingest-time
+    near-duplicate suppression (:meth:`_apply_neardup`).
+
+    ``compact_every_n_batches``: after every N-th batch, rewrite the
+    buckets fragmented into ``compact_min_files``+ parquet files
+    (``state.compact_buckets``) and the near-dup store's partitions.
+    Inside foreachBatch it is serialized with merges.
     """
-    from spark_streaming_with_debezium_spark.streaming.neardup import (
-        dedup_batch_against_store,
-    )
 
-    if len(spec.key_cols) != 1:
-        raise ValueError(
-            "near-dup suppression needs a single-column key to serve as "
-            f"doc_id; got key_cols={list(spec.key_cols)}"
+    spec: TableSpec
+    state: ParquetStateTable
+    drift_policy: str | None = None
+    drift_dead_letter_dir: str | None = None
+    compact_every_n_batches: int | None = None
+    compact_min_files: int = 4
+    neardup_store: object = None
+    neardup_text_col: str | None = None
+
+    def __post_init__(self) -> None:
+        if (self.neardup_store is None) != (self.neardup_text_col is None):
+            raise ValueError(
+                "neardup_store and neardup_text_col must be set together"
+            )
+        if self.neardup_store is None:
+            return
+        if len(self.spec.key_cols) != 1:
+            raise ValueError(
+                "near-dup suppression needs a single-column key to serve as "
+                f"doc_id; got key_cols={list(self.spec.key_cols)}"
+            )
+        if self.neardup_text_col not in self.spec.data_cols:
+            raise ValueError(f"text_col {self.neardup_text_col!r} not in spec.data_cols")
+
+    def __call__(self, raw_batch: DataFrame, batch_id: int) -> None:
+        if self.drift_policy is not None:
+            try:
+                self.spec = apply_drift(
+                    raw_batch, self.spec, self.state, policy=self.drift_policy
+                )
+            except SchemaDriftError as err:
+                if self.drift_dead_letter_dir is None:
+                    raise
+                quarantine_batch(
+                    raw_batch.withColumn("_drift_reason", F.lit(str(err))),
+                    self.drift_dead_letter_dir, "_batch_id", batch_id,
+                )
+                return  # quarantined; the stream continues
+        if self.neardup_store is None:
+            batch_apply(raw_batch, self.spec, self.state)
+        else:
+            self._apply_neardup(raw_batch)
+        n = self.compact_every_n_batches
+        if n and (batch_id + 1) % n == 0:
+            self.state.compact_buckets(min_files=self.compact_min_files)
+            if self.neardup_store is not None:
+                self.neardup_store.compact()
+
+    def _apply_neardup(self, raw_batch: DataFrame) -> None:
+        """Parse → LWW-compact → drop upserts that near-duplicate an
+        already-accepted document (or an earlier doc in the same batch)
+        → merge survivors + deletes: the ``SignatureStore`` stage of
+        streaming/neardup.py composed into the upsert, so ingest and
+        dedup share the micro-batch, the checkpoint and the replay
+        story instead of running as two parallel pipelines.
+
+        Ordering/crash contract: the state merge runs inside the dedup
+        stage's ``sink`` callback, i.e. BEFORE the signature store
+        mutates. A crash in between replays the batch against an
+        unchanged store, re-derives the same survivors (the probe
+        excludes the batch's own doc_ids), and the LWW merge is
+        idempotent. Semantics note: an UPDATE whose new text
+        near-duplicates another accepted document is suppressed — state
+        keeps the document's previous version; deletes always pass
+        through (a delete for a suppressed key is a no-op merge).
+        """
+        from spark_streaming_with_debezium_spark.streaming.neardup import (
+            dedup_batch_against_store,
         )
-    key = spec.key_cols[0]
-    if text_col not in spec.data_cols:
-        raise ValueError(f"text_col {text_col!r} not in spec.data_cols")
-    seq_cols = tuple(c for c in seq_cols if c in raw_batch.columns)
-    changes = parse_envelope(raw_batch, spec, seq_cols=seq_cols)
-    order = seq_cols if seq_cols else ("ts_ms",)
-    latest = compact_latest(changes, spec.key_cols, order_cols=order)
-    data_cols = [c for c in spec.data_cols if c not in spec.key_cols]
-    deletes = latest.filter(F.col("deleted"))
-    docs = (
-        latest.filter(~F.col("deleted"))
-        .withColumnRenamed(key, "doc_id")
-        .withColumnRenamed(text_col, "text")
-    )
 
-    def sink(kept: DataFrame) -> None:
-        survivors = kept.withColumnRenamed("doc_id", key).withColumnRenamed(
-            "text", text_col
+        spec, text_col = self.spec, self.neardup_text_col
+        key = spec.key_cols[0]
+        latest = latest_changes(raw_batch, spec)
+        deletes = latest.filter(F.col("deleted"))
+        docs = (
+            latest.filter(~F.col("deleted"))
+            .withColumnRenamed(key, "doc_id")
+            .withColumnRenamed(text_col, "text")
         )
-        state.merge(survivors.unionByName(deletes), data_cols=data_cols)
 
-    dedup_batch_against_store(docs, store, threshold=threshold, sink=sink)
+        def sink(kept: DataFrame) -> None:
+            survivors = kept.withColumnRenamed("doc_id", key).withColumnRenamed(
+                "text", text_col
+            )
+            self.state.merge(
+                survivors.unionByName(deletes), data_cols=_merge_cols(spec)
+            )
+
+        dedup_batch_against_store(docs, self.neardup_store, sink=sink)
+
+
+def start_foreach_batch(
+    stream: DataFrame, fn, checkpoint_dir: str, available_now: bool = True
+):
+    """Start ``stream`` as a query that runs ``fn(batch_df, batch_id)``
+    per micro-batch, checkpointed at ``checkpoint_dir``.
+
+    ``available_now=True`` drains all available input then stops —
+    deterministic for tests and the right trigger for backfills; False
+    keeps the query running on the default micro-batch trigger, as the
+    reference does.
+    """
+    writer = (
+        stream.writeStream.foreachBatch(fn)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def run_cdc_stream(
@@ -305,99 +398,18 @@ def run_cdc_stream(
     compact_min_files: int = 4,
     neardup_store=None,
     neardup_text_col: str | None = None,
-    neardup_threshold: float = 0.5,
     drift_policy: str | None = None,
     drift_dead_letter_dir: str | None = None,
 ):
-    """Continuous CDC upsert: writeStream.foreachBatch(batch_apply).
-
-    ``available_now=True`` drains all available input then stops —
-    deterministic for tests and the right trigger for backfills; set
-    False for a continuously running query (default micro-batch
-    trigger, as the reference uses).
-
-    ``compact_every_n_batches`` opts into periodic small-file
-    maintenance: every N micro-batches, buckets fragmented into
-    ``compact_min_files``+ parquet files are rewritten via
-    ``state.compact_buckets`` — a long-running CDC stream otherwise
-    accumulates fragments from crash-recovered or externally-appended
-    buckets, and small files are the classic lake-scale read killer.
-    Runs inside foreachBatch, so it is serialized with merges (no
-    concurrent writer) and its cost amortizes over N batches.
-
-    ``neardup_store`` (a ``streaming.neardup.SignatureStore``) +
-    ``neardup_text_col`` opt the stream into ingest-time near-dup
-    suppression: each batch's upserts are LSH-probed against the
-    accepted corpus and in-batch candidates, duplicates dropped before
-    the merge (see :func:`batch_apply_with_neardup`). Store compaction
-    piggybacks on the same ``compact_every_n_batches`` cadence.
-
-    ``drift_policy`` ('evolve' | 'strict') opts into per-batch schema
-    drift handling against the IN-BAND Connect schema (cdc/drift.py):
-    'evolve' auto-adds nullable columns / widens numerics in both the
-    parse spec and the state table's sidecar schema before merging;
-    destructive drift (dropped/retyped columns) raises and fails the
-    batch VISIBLY instead of silently dropping data. The evolved spec
-    carries across micro-batches within this stream.
-
-    ``drift_dead_letter_dir`` changes the destructive-drift outcome
-    from fail-the-stream to quarantine-and-continue: the ENTIRE raw
-    batch is written to the dead-letter path as its own ``_batch_id``
-    partition (:func:`quarantine_batch`, so a replayed batch id is not
-    duplicated), with a ``_drift_reason`` column for triage, and its merge is
-    skipped, so one upstream DDL accident doesn't stall every other
-    table sharing the stream. The quarantined batch is replayable
-    after the operator fixes the spec — the at-scale posture for a
-    multi-team CDC bus.
-    """
-    if (neardup_store is None) != (neardup_text_col is None):
-        raise ValueError(
-            "neardup_store and neardup_text_col must be set together"
-        )
-    live_spec = [spec]  # mutable: drift evolution carries across batches
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        projected = (
-            project_kafka(batch_df) if "topic" in batch_df.columns else batch_df
-        )
-        spec = live_spec[0]
-        if drift_policy is not None:
-            from spark_streaming_with_debezium_spark.cdc.drift import (
-                SchemaDriftError,
-                apply_drift,
-            )
-
-            try:
-                spec = apply_drift(projected, spec, state, policy=drift_policy)
-            except SchemaDriftError as err:
-                if drift_dead_letter_dir is None:
-                    raise
-                quarantine_batch(
-                    projected.withColumn("_drift_reason", F.lit(str(err))),
-                    drift_dead_letter_dir, "_batch_id", batch_id,
-                )
-                return  # quarantined; stream continues
-            live_spec[0] = spec
-        if neardup_store is not None:
-            batch_apply_with_neardup(
-                projected, spec, state, neardup_store,
-                neardup_text_col, threshold=neardup_threshold,
-            )
-        else:
-            batch_apply(projected, spec, state)
-        if (
-            compact_every_n_batches
-            and (batch_id + 1) % compact_every_n_batches == 0
-        ):
-            state.compact_buckets(min_files=compact_min_files)
-            if neardup_store is not None:
-                neardup_store.compact()
-
-    writer = (
-        raw_stream.writeStream.foreachBatch(_fn)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    """Continuous CDC upsert of one table: a :class:`TableStep` (see it
+    for the drift, near-dup and compaction options) as the foreachBatch
+    body, started by :func:`start_foreach_batch`. A raw Kafka stream (one
+    with a ``topic`` column) goes through :func:`project_kafka` first."""
+    step = TableStep(
+        spec, state, drift_policy, drift_dead_letter_dir,
+        compact_every_n_batches, compact_min_files,
+        neardup_store, neardup_text_col,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    if "topic" in raw_stream.columns:
+        raw_stream = project_kafka(raw_stream)
+    return start_foreach_batch(raw_stream, step, checkpoint_dir, available_now)

@@ -33,7 +33,6 @@ from spark_streaming_with_debezium_spark.cdc.merge import ParquetStateTable
 from spark_streaming_with_debezium_spark.cdc.pipeline import (
     initial_load,
     kafka_reader,
-    project_kafka,
     run_cdc_stream,
 )
 from spark_streaming_with_debezium_spark.session import get_spark
@@ -94,9 +93,7 @@ def run(args: argparse.Namespace, spark: SparkSession | None = None) -> None:
     if not state.exists():
         state.init(spark.createDataFrame([], spec.value_schema))
     if args.source == "kafka":
-        stream = project_kafka(
-            kafka_reader(spark, args.kafka_servers, args.topic)
-        )
+        stream = kafka_reader(spark, args.kafka_servers, args.topic)
     else:
         stream = spark.readStream.schema(RAW_SCHEMA).json(args.input)
     q = run_cdc_stream(

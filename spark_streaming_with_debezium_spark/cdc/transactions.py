@@ -17,16 +17,20 @@ transaction, across tables OR across micro-batches.
 
 Semantics per micro-batch (:func:`apply_batch_transactional`):
 
-1. events WITHOUT a transaction block apply immediately (passthrough —
+1. events WITHOUT a transaction block apply in this batch (passthrough —
    non-transactional topics keep the reference's behavior);
 2. transactional events and END markers are unioned into the pending
    buffer, deduplicated by Kafka ``(topic, partition, offset)`` /
    transaction id so foreachBatch replays after a crash cannot
    double-count;
 3. a transaction is COMPLETE when ``count(buffered events) ==
-   end.event_count``; complete transactions' events are routed through
-   the normal per-table parse→compact→merge
-   (:meth:`CdcRegistry.apply_batch`), incomplete ones stay buffered.
+   end.event_count``; incomplete ones stay buffered;
+4. the passthrough events and the complete transactions' events are
+   applied TOGETHER by one :meth:`CdcRegistry.apply_batch` (the normal
+   per-table parse→compact→merge), so last-write-wins on ``(partition,
+   offset)`` keeps the newest event of a key whichever set it came in
+   — an older buffered transaction event never overwrites a newer
+   passthrough one.
 
 Crash safety: the buffer is a versioned parquet store — a new version
 directory is fully written and fsynced BEFORE the ``CURRENT`` pointer
@@ -49,6 +53,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_with_debezium_spark.cdc.pipeline import start_foreach_batch
 from spark_streaming_with_debezium_spark.cdc.registry import CdcRegistry
 from spark_streaming_with_debezium_spark.storage.fs import (
     LocalFS,
@@ -56,6 +61,7 @@ from spark_streaming_with_debezium_spark.storage.fs import (
     fs_for_path,
 )
 
+_APPLY_COLS = ("topic", "key", "value", "partition", "offset")
 _EVENTS_SCHEMA = (
     "topic string, key string, value string, partition int, offset long, "
     "txn_id string"
@@ -182,7 +188,7 @@ def split_transactional(
     )
     immediate = data.filter(F.col("txn_id").isNull()).drop("txn_id")
     txn_events = data.filter(F.col("txn_id").isNotNull()).select(
-        "topic", "key", "value", "partition", "offset", "txn_id"
+        *_APPLY_COLS, "txn_id"
     )
     return immediate, txn_events, ends
 
@@ -205,8 +211,6 @@ def apply_batch_transactional(
     the retention window age out, matching how far back foreachBatch
     can actually replay."""
     immediate, txn_events, ends = split_transactional(raw_batch, txn_topic)
-    registry.apply_batch(immediate, batch_id)
-
     pend_events, pend_ends, applied = buffer.read()
     applied = applied.persist()
     fresh_events = txn_events.join(applied, "txn_id", "left_anti")
@@ -226,8 +230,8 @@ def apply_batch_transactional(
             .filter(F.col("n_seen") == F.col("event_count"))
             .select("txn_id")
         )
-        to_apply = all_events.join(complete, "txn_id", "left_semi").drop(
-            "txn_id"
+        to_apply = immediate.select(*_APPLY_COLS).unionByName(
+            all_events.join(complete, "txn_id", "left_semi").select(*_APPLY_COLS)
         )
         registry.apply_batch(to_apply, batch_id)
         keep_events = all_events.join(complete, "txn_id", "left_anti")
@@ -253,15 +257,9 @@ def run_transactional_stream(
 ):
     """One streaming query: transaction-atomic apply across every
     registered table."""
-    writer = (
-        raw_stream.writeStream.foreachBatch(
-            lambda b, bid: apply_batch_transactional(
-                registry, buffer, b, txn_topic, bid
-            )
-        )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        raw_stream,
+        lambda b, bid: apply_batch_transactional(registry, buffer, b, txn_topic, bid),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -212,6 +212,22 @@ def fs_for_path(spark: SparkSession, path: str) -> StateFS:
     return LocalFS()
 
 
+def fragmented_partitions(
+    fs: StateFS, path: str, col: str, min_files: int
+) -> list[int]:
+    """Values ``v`` whose ``<col>=<v>`` partition dir under ``path``
+    holds ``min_files`` or more parquet files: the compaction targets
+    of a store that leaves one file per touched partition per write."""
+    prefix = col + "="
+    out = []
+    for d in fs.listdir(path):
+        if d.startswith(prefix):
+            files = fs.listdir(os.path.join(path, d))
+            if sum(f.endswith(".parquet") for f in files) >= min_files:
+                out.append(int(d[len(prefix):]))
+    return out
+
+
 def swap_dirs(
     fs: StateFS,
     staged: str,

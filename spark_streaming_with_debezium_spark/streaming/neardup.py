@@ -48,13 +48,12 @@ construction.
 
 from __future__ import annotations
 
-import os  # os.path.join only — file ops go through StateFS
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_with_debezium_spark.storage.fs import (
     StateFS,
+    fragmented_partitions,
     fs_for_path,
     recover_swap,
     swap_dirs,
@@ -115,16 +114,7 @@ class SignatureStore:
         if not self.exists():
             return 0
         recover_swap(self.fs, *self._compact_dirs(), by_name=True)
-        fragmented = []
-        for d in self.fs.listdir(self.path):
-            if d.startswith("_bdir="):
-                files = [
-                    f
-                    for f in self.fs.listdir(os.path.join(self.path, d))
-                    if f.endswith(".parquet")
-                ]
-                if len(files) >= min_files:
-                    fragmented.append(int(d.split("=", 1)[1]))
+        fragmented = fragmented_partitions(self.fs, self.path, "_bdir", min_files)
         if not fragmented:
             return 0
         sub = self.spark.read.parquet(self.path).filter(

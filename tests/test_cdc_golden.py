@@ -572,3 +572,24 @@ def test_snapshot_to_continuous_handoff(spark, tmp_path):
         for r in state.read().collect()
     }
     assert final2 == final
+
+
+def test_initial_load_drops_keys_deleted_later_in_input(spark, tmp_path):
+    """A bootstrap input whose snapshot read of a key is followed by its
+    delete must not bring the key back: LWW-compact first, then drop
+    the keys whose latest event is a delete."""
+    from spark_streaming_with_debezium_spark.cdc.pipeline import initial_load
+
+    state = ParquetStateTable(
+        spark, str(tmp_path / "state"), key_cols=["id"], n_buckets=4
+    )
+    raw = spark.createDataFrame(
+        [
+            envelope("r", 1, 0, email="a@x"),
+            envelope("r", 2, 1, email="b@x"),
+            envelope("d", 1, 2),
+        ],
+        RAW_SCHEMA,
+    )
+    initial_load(raw, CUSTOMERS, state)
+    assert [(r.id, r.email) for r in state.read().collect()] == [(2, "b@x")]

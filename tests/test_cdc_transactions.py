@@ -259,3 +259,25 @@ def test_transactional_stream_with_checkpoint(spark, tmp_path):
     ).awaitTermination()
     assert _state(so) == [(1, 10)]
     assert _state(sc) == [(1, "x")]
+
+
+def test_buffered_txn_event_does_not_overwrite_newer_bare_event(spark, tmp_path):
+    """A transaction event buffered in batch 1 (offset 5) completes in
+    batch 2, which also carries a bare event for the same key at offset
+    9: both apply in one pass, so last-write-wins keeps offset 9."""
+    reg, buf, so, sc = _setup(spark, tmp_path)
+    b1 = spark.createDataFrame(
+        [_env("srv.db.customers", "u", 7, 5, {"email": "old@x"}, txn="T5")],
+        RAW_COLS,
+    )
+    apply_batch_transactional(reg, buf, b1, TXN_TOPIC, batch_id=0)
+    assert _state(sc) == []  # T5 incomplete: buffered
+    b2 = spark.createDataFrame(
+        [
+            _env("srv.db.customers", "u", 7, 9, {"email": "new@x"}),  # no txn
+            _end("T5", 1, 10),
+        ],
+        RAW_COLS,
+    )
+    apply_batch_transactional(reg, buf, b2, TXN_TOPIC, batch_id=1)
+    assert _state(sc) == [(7, "new@x")]

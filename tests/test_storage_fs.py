@@ -344,3 +344,77 @@ def test_swap_crash_at_every_file_op_then_replay(spark, tmp_path, backend, call)
         assert got == want, f"{call} crashed at file op {k}/{n_ops}"
         assert reopened.n_buckets == want_n
         assert os.listdir(d) == ["t"], f"leftovers after crash at op {k}"
+
+
+def _setup_signature_store(spark, path):
+    from spark_streaming_with_debezium_spark.streaming.neardup import SignatureStore
+
+    store = SignatureStore(spark, path)
+    # three appends of rows spread over _bdir 0..3: every partition
+    # ends up with three files
+    for lo in (0, 100, 200):
+        store.append(
+            spark.range(lo, lo + 16).select(
+                F.col("id").alias("doc_id"),
+                (F.col("id") % 2).cast("int").alias("band"),
+                (F.col("id") % 4).alias("bucket"),
+                F.array(F.col("id"), F.col("id") * 3).alias("sig"),
+            )
+        )
+
+
+@pytest.mark.parametrize("backend", ["local", "hadoop"])
+def test_signature_store_compact_crash_at_every_file_op_then_replay(
+    spark, tmp_path, backend
+):
+    """Crash ``SignatureStore.compact`` at each of its file operations in
+    turn, reopen the store and replay ``compact``: the store must hold
+    the rows of a run that never crashed, with no ``_compact_tmp`` or
+    ``_aside`` directory left next to it."""
+    import shutil
+
+    from spark_streaming_with_debezium_spark.streaming.neardup import SignatureStore
+
+    base_cls = LocalFS if backend == "local" else HadoopFS
+
+    def uri(local_dir):
+        return local_dir if backend == "local" else "file://" + local_dir
+
+    def crash_fs(path):
+        return _crashing(base_cls)(*(() if backend == "local" else (spark, path)))
+
+    def rows(path):
+        return sorted(
+            (r.doc_id, r.band, r.bucket, tuple(r.sig), r._bdir)
+            for r in spark.read.parquet(path).collect()
+        )
+
+    base = str(tmp_path / "base" / "s")
+    _setup_signature_store(spark, base)
+    want = rows(base)
+
+    def fresh(name):
+        d = str(tmp_path / name)
+        shutil.copytree(base, d + "/s")
+        return d, uri(d + "/s")
+
+    _, ref_path = fresh("ref")
+    counter = crash_fs(ref_path)
+    ref = SignatureStore(spark, ref_path, fs=counter)
+    counter.ops = 0
+    assert ref.compact(min_files=3) == 4
+    n_ops = counter.ops
+    assert rows(ref_path) == want
+    assert n_ops >= 5
+
+    for k in range(1, n_ops + 1):
+        d, path = fresh(f"crash{k}")
+        fs = crash_fs(path)
+        st = SignatureStore(spark, path, fs=fs)
+        fs.ops, fs.crash_at = 0, k
+        with pytest.raises(_Crash):
+            st.compact(min_files=3)
+        reopened = SignatureStore(spark, path)
+        reopened.compact(min_files=3)
+        assert rows(path) == want, f"compact crashed at file op {k}/{n_ops}"
+        assert os.listdir(d) == ["s"], f"leftovers after crash at op {k}"
